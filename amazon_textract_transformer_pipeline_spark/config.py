@@ -1,13 +1,15 @@
 """Field/entity configuration (util/config.py:31-95, SURVEY §1.5).
 
-The reference's FieldConfiguration dataclass becomes a small broadcast
-DataFrame; ``SortOrder`` is the position among non-ignored entries
-(main.py:85,122).
+The reference's FieldConfiguration dataclass becomes a small DataFrame;
+``SortOrder`` is the position among non-ignored entries (main.py:85,122).
+The doc-grain extraction reads the non-ignored rows on the driver and
+inlines them into its expression as a SQL literal (:func:`config_sql`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .schemas import FIELD_CONFIG_SCHEMA
 
@@ -49,6 +51,45 @@ def field_config_rows(cfgs: list[dict]) -> list[dict]:
 
 def field_config_df(spark: SparkSession, cfgs: list[dict]) -> DataFrame:
     return spark.createDataFrame(field_config_rows(cfgs), FIELD_CONFIG_SCHEMA)
+
+
+#: Most non-ignored fields a config may have: the doc-grain extraction
+#: inlines the config into its expression as a literal.
+MAX_FIELDS = 1000
+
+_FIELD_SQL_TYPES = {"ClassId": "int", "Name": "string", "Optional": "boolean",
+                    "Select": "string", "SortOrder": "int"}
+
+
+def active_fields(config_df: DataFrame) -> list[dict]:
+    """The non-ignored rows of a FIELD_CONFIG_SCHEMA DataFrame, in SortOrder
+    order. Collected to the driver, bounded by :data:`MAX_FIELDS`."""
+    rows = (config_df.filter(~F.coalesce("Ignore", F.lit(False)))
+            .limit(MAX_FIELDS + 1).collect())
+    if len(rows) > MAX_FIELDS:
+        raise ValueError(f"field config has more than {MAX_FIELDS} fields")
+    return sorted((r.asDict() for r in rows), key=lambda r: r["SortOrder"])
+
+
+def _sql_lit(v, sql_type: str) -> str:
+    if v is None:
+        return f"cast(NULL as {sql_type})"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def config_sql(fields: list[dict]) -> str:
+    """Typed SQL array literal of active field rows (ClassId, Name,
+    Optional, Select, SortOrder), in the given order."""
+    items = ", ".join(
+        "named_struct(" + ", ".join(f"'{k}', {_sql_lit(f[k], t)}"
+                                    for k, t in _FIELD_SQL_TYPES.items()) + ")"
+        for f in fields)
+    struct = ",".join(f"{k}:{t}" for k, t in _FIELD_SQL_TYPES.items())
+    return f"cast(array({items}) as array<struct<{struct}>>)"
 
 
 #: Test/demo config exercising all five selectors, Ignore, Optional and

@@ -4,10 +4,12 @@ Assembly rule (the byte-identical contract): words joined ``" "`` within a
 line, lines joined ``"\\n"`` — ``fn-postprocess/util/extract.py:55-60``
 applied document-wide (SURVEY.md §2.8 E2).
 
-Implemented as higher-order array functions (``aggregate``/``transform``)
-over the nested pages column: a pure projection, whole-stage-codegen'd,
-**zero shuffle** — the flagship extraction path is scan → mapInPandas →
-project at any scale.
+Implemented as higher-order array functions over the nested pages column:
+each word becomes its text prefixed by ``" "`` or ``"\\n"`` (chosen by
+comparing its line_id with the previous word's, by index) and one
+``array_join`` concatenates them, so cost is linear in the page's words. It
+is a pure projection — **zero shuffle** — so the flagship extraction path
+is scan → mapInArrow → project at any scale.
 """
 
 from __future__ import annotations
@@ -15,30 +17,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Fold over the ordered word array: new line_id → '\n', same → ' '.
-# prev = -1 marks "no word seen yet" (line_id is 0-based).
-_PAGE_TEXT_EXPR = """
-aggregate(
-  {words},
-  struct(cast(-1 as int) as prev, cast('' as string) as acc),
-  (s, w) -> struct(
-      w.line_id,
-      CASE WHEN s.prev = -1 THEN w.text
-           WHEN w.line_id = s.prev THEN concat(s.acc, ' ', w.text)
-           ELSE concat(s.acc, chr(10), w.text) END),
-  s -> s.acc)
-"""
-
-
-def page_text_col(words_col: str = "words") -> Column:
-    return F.expr(_PAGE_TEXT_EXPR.format(words=words_col))
-
 
 def doc_text_col(pages_col: str = "pages") -> Column:
-    inner = _PAGE_TEXT_EXPR.format(words="pg.words")
+    page_text = ("array_join(transform(pg.words, (w, i) -> CASE "
+                 "WHEN i = 0 THEN w.text "
+                 "WHEN w.line_id = pg.words[i - 1].line_id THEN concat(' ', w.text) "
+                 "ELSE concat(chr(10), w.text) END), '')")
     return F.expr(
         f"array_join(transform(filter({pages_col}, pg -> size(pg.words) > 0), "
-        f"pg -> {inner}), chr(10))"
+        f"pg -> {page_text}), chr(10))"
     )
 
 

@@ -54,6 +54,20 @@ def stub_conf_sql(url: str = "url", page: str = "page_num",
             f"({spark_hash64(key)} % 500000) / cast(1000000 as double))")
 
 
+def stub_words_sql(pages: str = "pages", url: str = "url",
+                   n_classes: int = N_STUB_CLASSES) -> str:
+    """SQL: a document's reading-ordered word array with stub predictions,
+    straight from the doc-grain ``pages`` column — the same values
+    :func:`stub_predictions` gives the word relation, with no explode.
+    Elements: page_num, line_id, text, conf, word_id, box, pred_cls, pcc."""
+    cls = stub_class_sql(url, "pg.page_num", "i", n_classes)
+    conf = stub_conf_sql(url, "pg.page_num", "i")
+    return (f"flatten(transform({pages}, pg -> transform(pg.words, (w, i) -> "
+            "named_struct('page_num', pg.page_num, 'line_id', w.line_id, "
+            "'text', w.text, 'conf', w.conf, 'word_id', w.id, 'box', w.box, "
+            f"'pred_cls', {cls}, 'pcc', {conf}))))")
+
+
 def stub_predictions(words_df: DataFrame,
                      n_classes: int = N_STUB_CLASSES) -> DataFrame:
     """Enrich the word relation (from assembly.words_view) with deterministic

@@ -1,12 +1,20 @@
-"""Entity-mention extraction E1-E6 (SURVEY §2.8) — the relational heart.
+"""Entity-mention extraction E1-E6 (SURVEY §2.8) as a per-document expression.
 
-Rebuilds ``fn-postprocess/util/extract.py:93-131`` as window functions +
-aggregations. Faithful semantics, including the reference's quirks (verified
-against a rule-for-rule Python oracle in tests/ref_rules.py):
+Rebuilds ``fn-postprocess/util/extract.py:93-131``, which runs once per
+document, as one SQL higher-order-function expression over that document's
+reading-ordered word array (:func:`mentions_sql`). Nothing crosses a document
+boundary, so on the doc-grain path (``plans.pipeline``) mentions are a
+projection of the front-end row: no shuffle, no Python. Every step is
+index-based (``transform``/``filter``/``slice`` over positions), so cost is
+linear in the document's words; no fold grows an accumulator.
+
+Faithful semantics, including the reference's quirks (verified against a
+rule-for-rule Python oracle in tests/ref_rules.py):
 
 * Runs are *consecutive same-class words in document order*, spanning line
   and even page boundaries (extract.py:101-129 keeps ``current_cls`` across
-  the page loop).
+  the page loop). A run starts where a word's class differs from the
+  previous word's.
 * Unconfigured / ignored classes collapse to None ("other"), and consecutive
   None words form one run (extract.py:107-109).
 * A run only becomes a detection when a *later word with a different class
@@ -18,30 +26,83 @@ against a rule-for-rule Python oracle in tests/ref_rules.py):
   word Confidence) — mixing the 0-1 softmax scale with Textract's 0-100
   scale exactly as the reference does (extract.py:46-54).
 * Text = words joined " " per line, lines joined "\\n" (extract.py:55-60).
+* ``run_id`` numbers the document's runs from 0 when it starts with an
+  "other" run and from 1 otherwise; ``ixe`` is the detection's index among
+  the document's detections of its class (main.py:91).
 
-Shuffle profile: one shuffle on url (window partition), then run-grain
-groupBy reuses the same partitioning — Catalyst collapses it into a single
-exchange. url is unique per doc → no skew.
+:func:`extract_mentions` is the word-grain entry point: it nests the word
+relation by url (one exchange) and applies the same expression.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Fold ordered (line_key, text) structs into "words ' '-joined per line,
-# lines '\n'-joined" (E2). lk = page_num * 1e9 + line_id, orderable scalar.
-_MENTION_TEXT_EXPR = """
-aggregate(
-  {items},
-  struct(cast(-1 as bigint) as prev, cast('' as string) as acc),
-  (s, it) -> struct(
-      it.lk,
-      CASE WHEN s.prev = -1 THEN it.text
-           WHEN it.lk = s.prev THEN concat(s.acc, ' ', it.text)
-           ELSE concat(s.acc, chr(10), it.text) END),
-  s -> s.acc)
-"""
+from ..config import active_fields, config_sql
+
+
+def let(value: str, name: str, body: str) -> str:
+    """SQL that evaluates ``value`` once per row and binds it to the lambda
+    variable ``name`` inside ``body``. Reading a bound array by index inside
+    a nested lambda is O(1); repeating the array's expression there would
+    re-evaluate it per element."""
+    return f"transform(array({value}), {name} -> {body})[0]"
+
+
+# One detection from run r (j: run index, s: first word, e: the flushing
+# word) over the bound words ws, their run classes cs and the run's words rw.
+_BBOX = let(
+    "named_struct("
+    "'l', array_min(transform(rw, w -> w.box.left)), "
+    "'t', array_min(transform(rw, w -> w.box.top)), "
+    "'r', array_max(transform(rw, w -> w.box.left + w.box.width)), "
+    "'b', array_max(transform(rw, w -> w.box.top + w.box.height)))",
+    "bb",
+    "named_struct('left', bb.l, 'top', bb.t, "
+    "'width', bb.r - bb.l, 'height', bb.b - bb.t)")
+_MENTION = let("slice(ws, r.s + 1, r.e - r.s)", "rw", f"""named_struct(
+  'run_id', cast(r.j + CASE WHEN cs[0] IS NULL THEN 0 ELSE 1 END as bigint),
+  'ClassId', cs[r.s],
+  'Confidence', array_min(transform(rw,
+      w -> least(coalesce(w.pcc, 1.0D), w.conf))),
+  'Blocks', transform(rw, w -> w.word_id),
+  'BoundingBox', {_BBOX},
+  'PageNum', ws[r.e].page_num,
+  'Text', array_join(transform(rw, (w, k) -> CASE
+      WHEN k = 0 THEN w.text
+      WHEN w.page_num = ws[r.s + k - 1].page_num
+           AND w.line_id = ws[r.s + k - 1].line_id THEN concat(' ', w.text)
+      ELSE concat(chr(10), w.text) END), ''))""")
+
+
+def mentions_sql(words: str, fields: list[dict]) -> str:
+    """SQL: one document's mention array (E1-E4), grouped by field in
+    ``fields`` order and by document order within a field.
+
+    ``words``: SQL for the reading-ordered word array; each element has
+    page_num, line_id, text, conf, word_id, box, pred_cls, pcc.
+    ``fields``: the active field rows (``config.active_fields``).
+    """
+    ids = ", ".join(str(f["ClassId"]) for f in fields)
+    in_cfg = f"w.pred_cls IN ({ids})" if ids else "false"
+    starts = ("filter(transform(cs, (c, i) -> i), i -> CASE WHEN i = 0 THEN true "
+              "ELSE NOT (cs[i] <=> cs[i - 1]) END)")
+    # non-trailing runs of a configured class; e = the run's flushing word
+    runs = ("filter(transform(st, (s, j) -> named_struct('j', j, 's', s, "
+            "'e', CASE WHEN j + 1 < size(st) THEN st[j + 1] END)), "
+            "r -> r.e IS NOT NULL AND cs[r.s] IS NOT NULL)")
+    by_field = (
+        f"flatten(transform({config_sql(fields)}, f -> transform("
+        "filter(ms, m -> m.ClassId = f.ClassId), (m, ixe) -> named_struct("
+        "'run_id', m.run_id, 'ClassId', m.ClassId, 'ClassName', f.Name, "
+        "'Confidence', m.Confidence, 'Blocks', m.Blocks, "
+        "'BoundingBox', m.BoundingBox, 'PageNum', m.PageNum, 'Text', m.Text, "
+        "'RawText', cast(NULL as string), 'ixe', ixe))))")
+    return let(words, "ws", let(
+        f"transform(ws, w -> CASE WHEN {in_cfg} THEN w.pred_cls END)", "cs",
+        let(starts, "st", let(
+            f"transform({runs}, r -> {_MENTION})", "ms", by_field))))
 
 
 def extract_mentions(enriched_words: DataFrame, config_df: DataFrame) -> DataFrame:
@@ -49,108 +110,15 @@ def extract_mentions(enriched_words: DataFrame, config_df: DataFrame) -> DataFra
 
     ``enriched_words``: url, page_num, word_pos, line_id, text, conf,
     word_id, box, pred_cls, pcc (from enrich.stub_predictions or the real
-    model). ``config_df``: FIELD_CONFIG_SCHEMA; broadcast (tiny dim —
-    SURVEY §4 "broadcast of the small field-config relation").
+    model). ``config_df``: FIELD_CONFIG_SCHEMA. The words are nested per url
+    in (page_num, word_pos) order — one exchange — and
+    :func:`mentions_sql` runs on each document.
     """
-    cfg = F.broadcast(
-        config_df.filter(~F.coalesce("Ignore", F.lit(False)))
-        .select(F.col("ClassId").alias("cfg_cls"))
-    )
-    w = (
-        enriched_words.join(cfg, F.col("pred_cls") == F.col("cfg_cls"), "left")
-        # cls_norm: None unless the class is configured & not ignored
-        .withColumn("cls_norm", F.col("cfg_cls"))
-        # fold the two confidence scales before the shuffle (extract.py:46-54)
-        # and shed every column the window/agg don't need: the window sort is
-        # the engine's hottest shuffle, row width is its cost
-        .withColumn("wconf", F.least(F.coalesce("pcc", F.lit(1.0)), F.col("conf")))
-        .select("url", "page_num", "word_pos", "line_id", "text", "word_id",
-                "box", "cls_norm", "wconf")
-    )
-
-    # One window stage computes everything per-word: run ids (lag), and the
-    # flushing word's page (lead at the run's last word). A run's mention
-    # PageNum is the page of the word that flushes it — i.e. lead(page_num)
-    # at the run boundary; the doc's trailing run has lead = NULL and is
-    # thereby dropped, which is exactly the reference's missing final flush.
-    # All window functions share one (partition, order) → a single exchange.
-    order = Window.partitionBy("url").orderBy("page_num", "word_pos")
-    w = (
-        w.withColumn("gpos", F.row_number().over(order))
-        .withColumn(
-            "chg",
-            F.when(
-                ~F.col("cls_norm").eqNullSafe(F.lag("cls_norm").over(order)), 1
-            ).otherwise(0),
-        )
-        .withColumn("run_id", F.sum("chg").over(
-            order.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("_next_run", F.lead("run_id").over(order))
-        .withColumn(
-            "flush_page",
-            F.when(F.col("_next_run") != F.col("run_id"),
-                   F.lead("page_num").over(order)),
-        )
-    )
-    # class names re-attach on the tiny mention relation post-agg (broadcast)
-    # instead of riding every word through the window shuffle
-    names = F.broadcast(
-        config_df.filter(~F.coalesce("Ignore", F.lit(False)))
-        .select("ClassId", F.col("Name").alias("ClassName"))
-    )
-    return _finish_mentions(w).join(names, "ClassId").select(
-        "url", "run_id", "ClassId", "ClassName", "Confidence", "Blocks",
-        "BoundingBox", "PageNum", "Text", "RawText", "ixe")
-
-
-def _finish_mentions(w: DataFrame) -> DataFrame:
-    runs = (
-        w.filter(F.col("cls_norm").isNotNull())
-        .groupBy("url", "run_id")
-        .agg(
-            F.first("cls_norm").alias("ClassId"),
-            F.min("wconf").alias("Confidence"),
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("gpos").alias("g"),
-                        (F.col("page_num").cast("bigint") * F.lit(1000000000)
-                         + F.col("line_id")).alias("lk"),
-                        F.col("text").alias("text"),
-                        F.col("word_id").alias("word_id"),
-                    )
-                )
-            ).alias("items"),
-            F.min(F.col("box.left")).alias("_l"),
-            F.min(F.col("box.top")).alias("_t"),
-            F.max(F.col("box.left") + F.col("box.width")).alias("_r"),
-            F.max(F.col("box.top") + F.col("box.height")).alias("_b"),
-            F.max("flush_page").alias("PageNum"),
-        )
-    )
-    out = (
-        runs.filter(F.col("PageNum").isNotNull())  # trailing run never flushed
-        .select(
-            "url",
-            "run_id",
-            "ClassId",
-            "Confidence",
-            F.expr("transform(items, it -> it.word_id)").alias("Blocks"),
-            F.struct(
-                F.col("_l").alias("left"),
-                F.col("_t").alias("top"),
-                (F.col("_r") - F.col("_l")).alias("width"),
-                (F.col("_b") - F.col("_t")).alias("height"),
-            ).alias("BoundingBox"),
-            "PageNum",
-            F.expr(_MENTION_TEXT_EXPR.format(items="items")).alias("Text"),
-            F.lit(None).cast("string").alias("RawText"),
-        )
-    )
-    # ixe: the reference's per-field detection index (main.py:91, document
-    # order within a class) — drives first/last selectors downstream.
-    ix_w = Window.partitionBy("url", "ClassId").orderBy("run_id")
-    return out.withColumn("ixe", F.row_number().over(ix_w) - 1)
+    docs = enriched_words.groupBy("url").agg(F.array_sort(F.collect_list(
+        F.struct("page_num", "word_pos", "line_id", "text", "conf", "word_id",
+                 "box", "pred_cls", "pcc"))).alias("words"))
+    return docs.select(
+        "url", F.inline(F.expr(mentions_sql("words", active_fields(config_df)))))
 
 
 def normalize_mentions(mentions: DataFrame, config_df: DataFrame,

@@ -9,6 +9,7 @@ rather than the 200 default.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -63,7 +64,8 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     # Record the decode surface once per deployment: the active policy plus
     # which optional system libraries actually load on this host, so a
-    # cluster run leaves evidence of the codec coverage it ran with.
+    # cluster run leaves evidence of the codec coverage it ran with. On
+    # stderr: stdout belongs to the caller (bench.py prints one JSON line).
     print(f"[attp_spark] codec backends: {codec_backend_report()}",
-          flush=True)
+          file=sys.stderr, flush=True)
     return spark

@@ -53,13 +53,7 @@ def start_extraction_stream(pages_stream: DataFrame, out_dir: str,
         if batch_df.isEmpty():
             return
         res = extract_pipeline(batch_df, config=config, model="sql-stub")
-        out = (
-            res.extracted_text
-            .join(res.doc_confidences, "url", "left")
-            .select("url", "n_pages", "extracted_text", "Confidence",
-                    "needs_human_review")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
+        out = res.docs.withColumn("batch_id", F.lit(batch_id))
         try:
             (out.write.mode("overwrite")
              .option("partitionOverwriteMode", "dynamic")

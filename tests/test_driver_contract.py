@@ -93,3 +93,14 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"url", "extracted_text", "n_pages"}
+
+
+def test_session_report_stays_off_stdout(spark, capsys):
+    """bench.py's stdout is one JSON line: the session's codec-backend
+    report goes to stderr."""
+    from amazon_textract_transformer_pipeline_spark.session import get_spark
+
+    assert get_spark("attp-tests", cores=8, shuffle_partitions=8) is spark
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert "[attp_spark] codec backends:" in err

@@ -3,6 +3,9 @@ landing directory, resumable via checkpoint."""
 
 from __future__ import annotations
 
+from amazon_textract_transformer_pipeline_spark.plans.partitioning import (
+    spread_if_narrow,
+)
 from amazon_textract_transformer_pipeline_spark.sources import synthetic_pages_df
 from amazon_textract_transformer_pipeline_spark.streaming.extract_stream import (
     read_pages_stream,
@@ -63,3 +66,12 @@ def test_stream_replayed_batch_is_idempotent(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 40, "replayed micro-batch appended duplicates"
     assert got.select("url").distinct().count() == 40
+
+
+def test_spread_if_narrow_passes_streams_through(spark, tmp_path):
+    """The helper is safe on every caller's streaming input: ``.rdd`` is
+    illegal there, so a stream comes back unchanged."""
+    land = str(tmp_path / "landing")
+    synthetic_pages_df(spark, 4, seed=3, partitions=1).write.parquet(land)
+    stream = read_pages_stream(spark, land)
+    assert spread_if_narrow(stream, "url") is stream
